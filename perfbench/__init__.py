@@ -1,0 +1,1 @@
+"""Layered benchmark of the dedup engine; see README.md."""
